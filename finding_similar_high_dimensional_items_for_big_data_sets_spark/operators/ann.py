@@ -1492,10 +1492,18 @@ def random_codebooks(
     return rs.randn(m, n_codes, dim // m).tolist()
 
 
-#: sessions (by SparkContext identity) whose JVM passed the
+#: Spark applications (by :func:`_context_key`) whose JVM passed the
 #: pow(x,2) == x*x bit-identity check — an ENVIRONMENT property, not a
 #: data result, so caching it across invocations is sound.
-_SEQFOLD_GUARD_OK: dict[int, bool] = {}
+_SEQFOLD_GUARD_OK: dict[tuple[str, int], bool] = {}
+
+
+def _context_key(sc) -> tuple[str, int]:
+    """Identity of a SparkContext that a later context never shares.
+    ``id(sc)`` is not one: CPython reuses the id of a collected object,
+    so a context started after ``stop()`` could inherit its
+    predecessor's entry and skip the guard on a different JVM."""
+    return sc.applicationId, sc.startTime
 
 
 def _assert_pow_square_identity(spark) -> None:
@@ -1514,7 +1522,7 @@ def _assert_pow_square_identity(spark) -> None:
     ``spark.spark_graft.seqfold_guard=off`` skips it."""
     if spark.conf.get("spark.spark_graft.seqfold_guard", "on") == "off":
         return
-    key = id(spark.sparkContext)
+    key = _context_key(spark.sparkContext)
     if _SEQFOLD_GUARD_OK.get(key):
         return
     v = (F.rand(7) * 2 - 1) * F.pow(

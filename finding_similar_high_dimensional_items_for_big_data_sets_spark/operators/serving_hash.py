@@ -89,7 +89,7 @@ def _to_signed64(v: int) -> int:
 def band_key_local(slice_values, family: str) -> int:
     """Band key for one signature slice — identical to the Spark-side
     ``hashing.band_hash(concat_ws(',', slice), family)``."""
-    s = ",".join(str(int(v)) for v in slice_values).encode("utf-8")
+    s = ",".join(map(str, map(int, slice_values))).encode("utf-8")
     if family == HASH_FAMILY_PORTABLE:
         return int(hashlib.md5(s).hexdigest()[:15], 16)
     if family == HASH_FAMILY_XXHASH:
@@ -100,7 +100,8 @@ def band_key_local(slice_values, family: str) -> int:
 def band_hashes_local(sig: np.ndarray, params: MinHashParams) -> list[int]:
     """All band keys of one signature, band order 0..bands-1."""
     r = params.rows_per_band
+    vals = np.asarray(sig).tolist()  # Python ints once, not per band value
     return [
-        band_key_local(sig[b * r : (b + 1) * r], params.hash_family)
+        band_key_local(vals[b * r : (b + 1) * r], params.hash_family)
         for b in range(params.bands)
     ]

@@ -21,13 +21,26 @@ Scale note: one process serves one exported index (or one shard via
 tier). Queries never launch Spark jobs — Spark builds the artifact,
 the endpoint probes it, same division of labor as the reference's
 offline build / online probe split.
+
+Transport: every server speaks HTTP/1.1 keep-alive and writes each
+reply (headers and body) in one send. The scatter-gather router
+(:class:`RouterService`) keeps pooled connections to its replicas and
+fans out by writing the request to every replica before reading any
+answer, so one routed query costs no new TCP connection, no thread,
+and no executor. ``server_close()`` ends a server's established
+connections (and the router's idle pool), so a stopped replica stops
+answering.
 """
 
 from __future__ import annotations
 
+import http.client
 import json
+import socket
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import urlsplit
 
 import numpy as np
 
@@ -37,6 +50,12 @@ from finding_similar_high_dimensional_items_for_big_data_sets_spark.operators.se
 
 DEFAULT_K = 10
 PREVIEW_N = 10
+# replica requests one router request keeps in flight at most, and the
+# most idle connections the router keeps per replica
+_MAX_IN_FLIGHT = 16
+# a pooled connection that fails this way before any answer byte was
+# closed by the replica while idle: safe to retry on a new connection
+_STALE = (http.client.RemoteDisconnected, ConnectionResetError, BrokenPipeError)
 
 
 class QueryService:
@@ -175,36 +194,65 @@ def _make_handler(routes: dict, health):
     parsing, dispatch, reply, and logging behavior cannot diverge
     between tiers. ``routes``: path -> ``payload -> (status, body)``
     for POST; ``health``: ``() -> (status, body)`` for ``GET
-    /health``."""
+    /health``.
+
+    Connections are HTTP/1.1 keep-alive (a router holds pooled
+    connections to its replicas), so every reply path either consumes
+    the declared request body or closes the connection: unread body
+    bytes would be parsed as the next request."""
 
     class Handler(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
         def do_POST(self):  # noqa: N802 (http.server API)
+            data = self._body()
+            if data is None:
+                self._reply(400, {"error": "invalid Content-Length"})
+                return
             handle = routes.get(self.path.rstrip("/"))
             if handle is None:
                 self._reply(404, {"error": "not found"})
                 return
             try:
-                length = int(self.headers.get("Content-Length", 0))
-                payload = json.loads(self.rfile.read(length) or b"null")
-            except (ValueError, json.JSONDecodeError):
+                payload = json.loads(data or b"null")
+            except ValueError:  # JSONDecodeError, UnicodeDecodeError
                 self._reply(400, {"error": "invalid JSON body"})
                 return
             status, body = handle(payload)
             self._reply(status, body)
 
         def do_GET(self):  # noqa: N802
+            self._body()  # ignored, but never left unread
             if self.path.rstrip("/") == "/health":
                 self._reply(*health())
             else:
                 self._reply(404, {"error": "not found"})
 
+        def _body(self) -> bytes | None:
+            """The declared request body; None when its framing is
+            unusable (a malformed Content-Length, or a chunked body this
+            server does not decode), and then the connection closes
+            after the reply."""
+            length = self.headers.get("Content-Length", "0")
+            if "Transfer-Encoding" in self.headers or not (
+                length.isascii() and length.isdigit()
+            ):
+                self.close_connection = True
+                return None
+            return self.rfile.read(int(length))
+
         def _reply(self, status: int, body: dict) -> None:
             data = json.dumps(body).encode("utf-8")
-            self.send_response(status)
-            self.send_header("Content-Type", "application/json")
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
+            head = (
+                f"{self.protocol_version} {status} {self.responses[status][0]}\r\n"
+                "Content-Type: application/json\r\n"
+                f"Content-Length: {len(data)}\r\n"
+                + ("Connection: close\r\n" if self.close_connection else "")
+                + "\r\n"
+            )
+            # ONE send for headers and body: on a persistent connection a
+            # second small segment waits (Nagle) for the peer's delayed ACK
+            self.wfile.write(head.encode("latin-1") + data)
 
         def log_message(self, fmt, *args):  # silence per-request stderr
             pass
@@ -212,8 +260,45 @@ def _make_handler(routes: dict, health):
     return Handler
 
 
-def _serve(handler, host: str, port: int):
-    server = ThreadingHTTPServer((host, port), handler)
+class _Server(ThreadingHTTPServer):
+    """``ThreadingHTTPServer`` whose ``server_close`` also ends its
+    established keep-alive connections: their daemon handler threads
+    would otherwise go on answering from the stopped server's state.
+    Both directions are shut, so no answer leaves after the close (a
+    request still in flight sees its connection drop). ``on_close`` runs
+    last (the router closes its idle replica connections there)."""
+
+    def __init__(self, address, handler, on_close=None):
+        super().__init__(address, handler)
+        self._conns: set[socket.socket] = set()
+        self._conns_lock = threading.Lock()
+        self._on_close = on_close
+
+    def process_request(self, request, client_address):
+        with self._conns_lock:
+            self._conns.add(request)
+        super().process_request(request, client_address)
+
+    def shutdown_request(self, request):
+        with self._conns_lock:
+            self._conns.discard(request)
+        super().shutdown_request(request)
+
+    def server_close(self):
+        super().server_close()
+        with self._conns_lock:
+            conns, self._conns = self._conns, set()
+        for conn in conns:
+            try:
+                conn.shutdown(socket.SHUT_RDWR)
+            except OSError:  # already closed by its handler
+                pass
+        if self._on_close is not None:
+            self._on_close()
+
+
+def _serve(handler, host: str, port: int, on_close=None):
+    server = _Server((host, port), handler, on_close)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     return server, thread
@@ -523,11 +608,22 @@ class RouterService:
     envelope rejection is passed through) rather than silently serving
     a partial corpus.
 
-    ``timeout`` is the PER-REPLICA socket bound (seconds), applied to
-    every fan-out call and every health ping independently: a hung
-    replica turns into a 502 after ``timeout``, never an indefinitely
-    held router request, and ``GET /health`` pings all replicas in
-    parallel so one hung replica costs one timeout for the sweep."""
+    Transport: a small lock-guarded pool of idle keep-alive
+    ``http.client`` connections per replica. A fan-out serializes the
+    payload once, writes the request on one connection per replica, and
+    then reads the answers in replica order — the replicas work in
+    parallel on their own handler threads, and the router starts no
+    thread. A pooled connection that fails before any answer byte (the
+    replica closed it while idle, e.g. on a restart) is retried once on
+    a new connection; a timeout is never retried.
+
+    ``timeout`` (seconds) bounds each fan-out: every socket operation of
+    one fan-out (connect, write, read) runs against ONE deadline,
+    ``timeout`` after it starts. A hung replica turns into a 502 after
+    ``timeout``, never an indefinitely held router request, and ``GET
+    /health`` pings all replicas in one fan-out, so hung replicas cost
+    one timeout for the sweep. ``close()`` (called by the router
+    server's ``server_close``) closes the idle connections."""
 
     TIERS = ("lsh", "vector", "lexical")
 
@@ -550,8 +646,134 @@ class RouterService:
             u.rstrip("/") for u in (vector_replicas or [])
         ]
         self.timeout = timeout
+        self._netloc, self._prefix = {}, {}
+        for url in self.replicas + self.vector_replicas:
+            parts = urlsplit(url)
+            if parts.scheme != "http":
+                raise ValueError(f"replica url must be http://host:port, got {url!r}")
+            self._netloc[url], self._prefix[url] = parts.netloc, parts.path
+        # idle keep-alive connections per replica url (see _checkout)
+        self._idle: dict[str, list[http.client.HTTPConnection]] = {}
+        self._idle_lock = threading.Lock()
+        self._closed = False
 
     # -- transport ---------------------------------------------------------
+    def _checkout(self, url: str, fresh: bool):
+        """(connection, reused): an idle pooled connection to ``url``,
+        or a new one (always new when ``fresh``)."""
+        if not fresh:
+            with self._idle_lock:
+                idle = self._idle.get(url)
+                if idle:
+                    return idle.pop(), True
+        return http.client.HTTPConnection(self._netloc[url]), False
+
+    def _checkin(self, url: str, conn) -> None:
+        with self._idle_lock:
+            idle = self._idle.setdefault(url, [])
+            if not self._closed and len(idle) < _MAX_IN_FLIGHT:
+                idle.append(conn)
+                return
+        conn.close()
+
+    def close(self) -> None:
+        """Close every idle replica connection; connections in use
+        close when their request ends (the router server's
+        ``server_close`` calls this)."""
+        with self._idle_lock:
+            self._closed = True
+            conns = [c for idle in self._idle.values() for c in idle]
+            self._idle.clear()
+        for conn in conns:
+            conn.close()
+
+    @staticmethod
+    def _arm(conn, deadline: float) -> None:
+        """Bound the connection's next socket operations by ``deadline``."""
+        conn.timeout = max(deadline - time.monotonic(), 1e-3)
+        if conn.sock is not None:
+            conn.sock.settimeout(conn.timeout)
+
+    def _send(
+        self, url: str, path: str, data: bytes | None, deadline: float, fresh: bool = False
+    ):
+        """Write one request (``data`` None = GET) without waiting for
+        the answer: ``(conn, reused, None)``, or ``(None, False,
+        error)``. A reused connection the replica closed while it sat
+        idle is replaced by a new one, once."""
+        conn, reused = self._checkout(url, fresh)
+        self._arm(conn, deadline)
+        try:
+            conn.request(
+                "GET" if data is None else "POST",
+                self._prefix[url] + path,
+                data,
+                {"Content-Type": "application/json"},
+            )
+        except OSError as e:
+            conn.close()
+            if reused and isinstance(e, _STALE):
+                return self._send(url, path, data, deadline, fresh=True)
+            return None, False, e
+        return conn, reused, None
+
+    def _recv(
+        self, url: str, path: str, payload, sent, deadline: float
+    ) -> tuple[int, dict]:
+        """Read the answer to a request :meth:`_send` wrote. A reused
+        connection that fails before the status line (the replica
+        restarted or dropped it while idle) is retried once through
+        :meth:`_post` on a new connection; a timeout never is."""
+        conn, reused, err = sent
+        if conn is not None:
+            self._arm(conn, deadline)
+            resp = None
+            try:
+                resp = conn.getresponse()
+                raw = resp.read()
+            except (OSError, http.client.HTTPException) as e:
+                conn.close()
+                if reused and resp is None and isinstance(e, _STALE):
+                    return self._post(url, payload, path)
+                err = e
+            else:
+                if resp.will_close:
+                    conn.close()
+                else:
+                    self._checkin(url, conn)
+                return resp.status, self._parse_body(raw, resp.status)
+        return 503, {"error": f"replica unreachable: {err}"}
+
+    def _exchange(
+        self, requests: list, path: str, fresh: bool = False
+    ) -> list[tuple[int, dict]]:
+        """``[(status, body)]`` for ``requests`` = ``[(url, payload,
+        data)]`` (``data``: the payload serialized once, None = GET), in
+        order. Every request is written before any answer is read, so
+        the replicas work in parallel on their own handler threads with
+        no thread here; all answers are read against ONE deadline, so
+        hung replicas cost one ``timeout`` together."""
+        deadline = time.monotonic() + self.timeout
+        sent = [
+            self._send(url, path, data, deadline, fresh)
+            for url, _payload, data in requests
+        ]
+        return [
+            self._recv(url, path, payload, s, deadline)
+            for (url, payload, _data), s in zip(requests, sent)
+        ]
+
+    def _fan(self, urls: list[str], payload, path: str = "/query"):
+        data = json.dumps(payload).encode("utf-8")
+        return self._exchange([(u, payload, data) for u in urls], path)
+
+    def _post(self, url: str, payload, path: str = "/query") -> tuple[int, dict]:
+        """One POST round trip to replica ``url`` on a NEW connection:
+        the single retry of a request whose pooled connection went
+        stale."""
+        data = json.dumps(payload).encode("utf-8")
+        return self._exchange([(url, payload, data)], path, fresh=True)[0]
+
     @staticmethod
     def _parse_body(raw: bytes, status: int) -> dict:
         """Replica bodies are normalized to dicts here, so every later
@@ -566,32 +788,6 @@ class RouterService:
         if not isinstance(body, dict):
             return {"error": f"replica returned a non-object HTTP {status} body"}
         return body
-
-    def _post(self, url: str, payload: dict) -> tuple[int, dict]:
-        import urllib.error
-        import urllib.request
-
-        req = urllib.request.Request(
-            url,
-            data=json.dumps(payload).encode("utf-8"),
-            headers={"Content-Type": "application/json"},
-            method="POST",
-        )
-        try:
-            with urllib.request.urlopen(req, timeout=self.timeout) as resp:
-                return resp.status, self._parse_body(resp.read(), resp.status)
-        except urllib.error.HTTPError as e:
-            return e.code, self._parse_body(e.read(), e.code)
-        except (urllib.error.URLError, OSError) as e:
-            return 503, {"error": f"replica unreachable: {e}"}
-
-    def _fan(self, urls: list[str], payload: dict):
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(16, len(urls))) as ex:
-            return list(
-                ex.map(lambda u: self._post(u + "/query", payload), urls)
-            )
 
     @staticmethod
     def _check_cover(urls: list[str], results):
@@ -625,10 +821,6 @@ class RouterService:
                 ), None
         return None, [body["candidates"] for _s, body in results]
 
-    def _gather(self, urls: list[str], payload: dict):
-        """(error_response | None, per-replica candidate lists)."""
-        return self._check_cover(urls, self._fan(urls, payload))
-
     # -- endpoints ----------------------------------------------------------
     def handle_query(self, payload) -> tuple[int, dict]:
         if not isinstance(payload, dict):
@@ -637,7 +829,9 @@ class RouterService:
         if not isinstance(k, int) or isinstance(k, bool):
             return 400, {"error": "k must be an integer"}
         k = max(1, k)
-        err, cand_lists = self._gather(self.replicas, payload)
+        err, cand_lists = self._check_cover(
+            self.replicas, self._fan(self.replicas, payload)
+        )
         if err is not None:
             return err
         return 200, {"candidates": self._merge_tier(cand_lists, k)}
@@ -713,10 +907,11 @@ class RouterService:
         ``k``. Answer: ``{"results": [{"candidates": [...]}, ...]}``
         in query order.
 
-        Scale shape: ONE thread-pool sweep over all (query, replica)
-        pairs — a Q-query batch against R replicas costs
-        ceil(Q*R/pool) round-trip times, not Q sequential fan-outs;
-        per-replica timeouts apply to every pair independently.
+        Scale shape: the (query, replica) pairs go out 16 at a time,
+        each window written before any answer is read — a Q-query batch
+        against R replicas costs ceil(Q*R/16) round-trip times, not Q
+        sequential fan-outs; each window's answers are bounded by one
+        ``timeout``.
 
         Failure law: the batch is all-or-nothing, like the point
         endpoint's complete-cover rule — any replica failure on any
@@ -741,18 +936,13 @@ class RouterService:
             if not isinstance(q["k"], int) or isinstance(q["k"], bool):
                 return 400, {"error": f"queries[{i}].k must be an integer"}
             prepared.append(q)
-        from concurrent.futures import ThreadPoolExecutor
-
-        pairs = [
-            (qi, url) for qi in range(len(prepared)) for url in self.replicas
-        ]
-        with ThreadPoolExecutor(max_workers=min(16, len(pairs))) as ex:
-            flat = list(
-                ex.map(
-                    lambda p: self._post(p[1] + "/query", prepared[p[0]]),
-                    pairs,
-                )
-            )
+        requests = []
+        for q in prepared:
+            data = json.dumps(q).encode("utf-8")
+            requests += [(url, q, data) for url in self.replicas]
+        flat = []
+        for i in range(0, len(requests), _MAX_IN_FLIGHT):
+            flat += self._exchange(requests[i : i + _MAX_IN_FLIGHT], "/query")
         n_rep = len(self.replicas)
         results = []
         for qi, q in enumerate(prepared):
@@ -794,10 +984,21 @@ class RouterService:
             if key in payload
         }
         vec_payload["k"] = k
-        err, lex_lists = self._gather(self.replicas, lex_payload)
+        lex_data = json.dumps(lex_payload).encode("utf-8")
+        vec_data = json.dumps(vec_payload).encode("utf-8")
+        # both tiers in ONE fan-out; each cover is checked on its own
+        results = self._exchange(
+            [(u, lex_payload, lex_data) for u in self.replicas]
+            + [(u, vec_payload, vec_data) for u in self.vector_replicas],
+            "/query",
+        )
+        n_lex = len(self.replicas)
+        err, lex_lists = self._check_cover(self.replicas, results[:n_lex])
         if err is not None:
             return err
-        err, vec_lists = self._gather(self.vector_replicas, vec_payload)
+        err, vec_lists = self._check_cover(
+            self.vector_replicas, results[n_lex:]
+        )
         if err is not None:
             return err
         lex_hits = merge_topk_scores(
@@ -831,39 +1032,26 @@ class RouterService:
         no index trackable). Liveness alone decides the status code —
         a stale replica still serves a consistent (pre-delete)
         snapshot, so it is a reload prompt, not an outage."""
-        import urllib.error
-        import urllib.request
-        from concurrent.futures import ThreadPoolExecutor
 
-        def ping(url):
-            try:
-                with urllib.request.urlopen(
-                    url + "/health", timeout=self.timeout
-                ) as resp:
-                    if resp.status != 200:
-                        return False, None
-                    try:
-                        body = json.loads(resp.read())
-                    except (ValueError, json.JSONDecodeError):
-                        return True, None
-            except (urllib.error.URLError, OSError):
+        def ping(status, body):
+            if status != 200:
                 return False, None
-            vals = list(
-                (body.get("stale") or {}).values()
-                if isinstance(body, dict)
-                else []
-            )
+            stale = body.get("stale")
+            vals = list(stale.values()) if isinstance(stale, dict) else []
             if any(v is True for v in vals):
                 return True, True
             if vals and all(v is False for v in vals):
                 return True, False
             return True, None
 
-        # pinged in PARALLEL: a hung replica costs one timeout for the
-        # whole sweep, not one per replica behind it in the list
+        # every replica pinged at once (a hung one costs one timeout for
+        # the sweep), each on a NEW connection: liveness means the
+        # replica still accepts connections, which a pooled one cannot show
         urls = self.replicas + self.vector_replicas
-        with ThreadPoolExecutor(max_workers=min(16, len(urls))) as ex:
-            results = dict(zip(urls, ex.map(ping, urls)))
+        answers = self._exchange(
+            [(u, None, None) for u in urls], "/health", fresh=True
+        )
+        results = {url: ping(*a) for url, a in zip(urls, answers)}
         ok = {url: alive for url, (alive, _s) in results.items()}
         status = 200 if all(ok.values()) else 503
         return status, {
@@ -881,14 +1069,9 @@ class RouterService:
         502 tells the operator to re-issue — the merge law is
         unaffected either way (every replica always serves a complete
         answer for its shard, just possibly a pre-delete one)."""
-        from concurrent.futures import ThreadPoolExecutor
-
         body = payload if isinstance(payload, dict) else {}
         urls = self.replicas + self.vector_replicas
-        with ThreadPoolExecutor(max_workers=min(16, len(urls))) as ex:
-            results = list(
-                ex.map(lambda u: self._post(u + "/reload", body), urls)
-            )
+        results = self._fan(urls, body, "/reload")
         report = {
             url: resp for url, (_status, resp) in zip(urls, results)
         }
@@ -928,5 +1111,6 @@ def start_router_server(
         ),
         host,
         port,
+        on_close=service.close,
     )
     return server, thread

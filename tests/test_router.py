@@ -381,7 +381,7 @@ def test_router_timeout_bounds_hung_replica(spark, corpus):
 def test_router_rejects_malformed_200_body(spark, corpus):
     """A replica answering 200 with a body that has no candidates list
     is an incomplete cover like any other failure: 502, not a dropped
-    connection (round-8 guard in RouterService._gather)."""
+    connection (round-8 guard in RouterService._check_cover)."""
     from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
     import threading
 
@@ -466,3 +466,99 @@ def test_router_rejects_unparseable_200_body(spark, corpus):
         assert detail["replica"] == bad_url
     finally:
         _stop([(router, rt), (server, st), (bad, bt)])
+
+
+def test_router_follows_replica_restart(spark, corpus):
+    """Stopping a replica closes the router's pooled connections to it,
+    and a pooled connection that fails before any answer byte is
+    retried once on a new connection: after the replica restarts on the
+    same port with a different index, the router's next answer comes
+    from the new index. The router's own server_close closes its idle
+    pool, so the replicas' kept-alive connections end with it."""
+    import time
+
+    docs, _ = corpus
+    sigs = minhash.signatures(docs.filter(F.col("doc_id") < 100), PARAMS).cache()
+    bands = lsh.bands_table(sigs, PARAMS).cache()
+    old = ServingIndex.from_dataframes(
+        sigs.filter(F.col("doc_id") < 50), bands.filter(F.col("doc_id") < 50), PARAMS
+    )
+    new = ServingIndex.from_dataframes(sigs, bands, PARAMS)
+    qsig = [int(v) for v in sigs.filter(F.col("doc_id") == 77).first()["sig"]]
+    assert old.query(qsig, k=5) != new.query(qsig, k=5)
+
+    def routed():
+        status, body = _post(_url(router), "/query", {"vector": qsig, "k": 5})
+        assert status == 200
+        return [(c["id"], c["score"]) for c in body["candidates"]]
+
+    def direct(index):
+        return [(d, s) for d, s, _r in index.query(qsig, k=5)]
+
+    server, st = serving_http.start_server(old)
+    port = server.server_address[1]
+    router, rt = serving_http.start_router_server("lsh", [_url(server)])
+    replicas = [(server, st)]
+    try:
+        for _ in range(2):  # the second request reuses the pooled connection
+            assert routed() == direct(old)
+        _stop(replicas)
+        replicas = [serving_http.start_server(new, port=port)]
+        assert routed() == direct(new)
+        restarted = replicas[0][0]
+        assert restarted._conns  # the router's pooled connection
+        _stop([(router, rt)])
+        deadline = time.monotonic() + 5
+        while restarted._conns and time.monotonic() < deadline:
+            time.sleep(0.01)
+        assert not restarted._conns
+    finally:
+        _stop([(router, rt)] + replicas)
+
+
+def test_router_retries_a_stale_pooled_connection_once():
+    """A pooled connection the replica dropped while idle is retried
+    exactly once, on a new connection; when that fails too, the request
+    is a 502 (no retry loop)."""
+    import socketserver
+    import threading
+
+    accepted = []
+
+    class DropAfterOneAnswer(socketserver.StreamRequestHandler):
+        # connection 1 answers its first request keep-alive; every
+        # request after that is read and dropped before any answer byte
+        def handle(self):
+            accepted.append(self.client_address)
+            if len(accepted) == 1:
+                self._read_request()
+                data = b'{"candidates": []}'
+                self.wfile.write(
+                    b"HTTP/1.1 200 OK\r\nContent-Length: %d\r\n\r\n%s"
+                    % (len(data), data)
+                )
+            self._read_request()
+
+        def _read_request(self):
+            length = 0
+            while line := self.rfile.readline().strip():
+                if line.lower().startswith(b"content-length:"):
+                    length = int(line.split(b":")[1])
+            self.rfile.read(length)
+
+    flaky = socketserver.ThreadingTCPServer(("127.0.0.1", 0), DropAfterOneAnswer)
+    flaky.daemon_threads = True
+    ft = threading.Thread(target=flaky.serve_forever, daemon=True)
+    ft.start()
+    flaky_url = "http://%s:%d" % flaky.server_address
+    router, rt = serving_http.start_router_server("lsh", [flaky_url], timeout=5)
+    try:
+        status, body = _post(_url(router), "/query", {"vector": [1], "k": 5})
+        assert (status, body) == (200, {"candidates": []})
+        with pytest.raises(urllib.error.HTTPError) as ei:
+            _post(_url(router), "/query", {"vector": [1], "k": 5})
+        assert ei.value.code == 502
+        assert json.loads(ei.value.read())["replica"] == flaky_url
+        assert len(accepted) == 2  # the pooled connection, then ONE retry
+    finally:
+        _stop([(router, rt), (flaky, ft)])

@@ -99,6 +99,69 @@ def test_health_and_404(endpoint):
     assert ei.value.code == 404
 
 
+def test_keep_alive_framing_unknown_route_then_query(endpoint):
+    """On one persistent connection, a POST to an unknown route has its
+    body consumed, so the next request parses cleanly: 404, then the
+    correct 200. A malformed Content-Length is a 400 that closes the
+    connection (its body cannot be delimited)."""
+    import http.client
+    import socket
+
+    url, qsig, index = endpoint
+    host, port = url.split("//")[1].split(":")
+    conn = http.client.HTTPConnection(host, int(port), timeout=10)
+    try:
+        headers = {"Content-Type": "application/json"}
+        conn.request("POST", "/nope", json.dumps({"x": 1}).encode(), headers)
+        resp = conn.getresponse()
+        assert resp.status == 404
+        assert json.loads(resp.read()) == {"error": "not found"}
+        conn.request("POST", "/query", json.dumps({"vector": qsig, "k": 5}).encode(), headers)
+        resp = conn.getresponse()
+        assert resp.status == 200
+        assert [(c["id"], c["score"]) for c in json.loads(resp.read())["candidates"]] == [
+            (d, s) for d, s, _r in index.query(qsig, k=5)
+        ]
+        assert not resp.will_close  # the connection stays open
+    finally:
+        conn.close()
+    with socket.create_connection((host, int(port)), timeout=10) as sock:
+        sock.sendall(
+            b"POST /query HTTP/1.1\r\nHost: x\r\nContent-Length: -5\r\n\r\n"
+            b"POST /query HTTP/1.1\r\nHost: x\r\n\r\n"
+        )
+        reply = b""
+        while chunk := sock.recv(4096):
+            reply += chunk
+    assert reply.startswith(b"HTTP/1.1 400 ")
+    assert b"Connection: close" in reply
+    assert reply.count(b"HTTP/1.1") == 1  # nothing after the 400
+
+
+def test_server_close_ends_keep_alive_connections(endpoint):
+    """A stopped server's established keep-alive connections close: its
+    handler threads must not go on answering from the old index."""
+    import http.client
+
+    _url, qsig, index = endpoint
+    server, _thread = serving_http.start_server(index)
+    host, port = server.server_address
+    conn = http.client.HTTPConnection(host, port, timeout=10)
+    body = json.dumps({"vector": qsig, "k": 5}).encode()
+    try:
+        conn.request("POST", "/query", body)
+        resp = conn.getresponse()
+        assert resp.status == 200 and not resp.will_close
+        resp.read()
+        server.shutdown()
+        server.server_close()
+        with pytest.raises((http.client.RemoteDisconnected, ConnectionError)):
+            conn.request("POST", "/query", body)
+            conn.getresponse()
+    finally:
+        conn.close()
+
+
 def test_reload_is_mutually_exclusive(spark, sf_dir):
     """Two concurrent POST /reload must not both run Spark export jobs:
     the check-and-swap is guarded by server.reload_lock (the same lock
